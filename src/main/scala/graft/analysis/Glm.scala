@@ -253,9 +253,9 @@ object Glm {
   private def r6(v: Double): Double = math.floor(v * 1.0e6 + 0.5) / 1.0e6
 
   /** Scalar twin of [[r9s]] — the 9dp rounding that quenches EXP ulp
-    * drift. (FLOOR's BIGINT round-trip is exact here: the argument is
-    * ≤ ~1e9, inside the 2^53 integer-exact range.) */
-  private def r9d(v: Double): Double = math.floor(v * 1.0e9 + 0.5) / 1.0e9
+    * drift. It round-trips through Long as SQL FLOOR does (a BIGINT), so
+    * NaN maps to 0 on both sides and large values clamp alike. */
+  private def r9d(v: Double): Double = math.floor(v * 1.0e9 + 0.5).toLong / 1.0e9
 
   /** Quantizers matching [[qsum]]/[[qsum9]]'s per-term FLOOR(t·grid + 0.5):
     * SQL FLOOR(double) is a BIGINT via the JVM double→long cast (clamping
@@ -404,23 +404,10 @@ object Glm {
         xs.zipWithIndex.map { case (c, i) => c.cast("double").as(s"__x${i + 1}") } :+
         y.cast("double").as("__y"): _*)
       .filter(expr(completeCase(p)))
-    // Size dispatch (round 16, the connectedComponents discipline): a
-    // complete-case working set that fits on the driver is fit there in
-    // ONE bounded limit(cap+1).collect() job — all K moment passes become
-    // driver arithmetic over the collected rows (localIrlsFit replays the
-    // moment fragments bit-for-bit), replacing K aggregation jobs + a
-    // persist + K−1 broadcast beta joins. Past the cap, the loop below
-    // runs unchanged. A null group falls through to the loop: the
-    // distributed beta join drops a null group after iteration 1 (null
-    // never equi-joins), and the loop is the one source of truth for that
-    // corner. Driver state is cap-bounded: ~(p+2)-column rows, never the
-    // corpus — at the default 2^20 cap and p=6 that is realistically a few
-    // hundred MB of boxed rows, transient.
-    if (localRowCap > 0) {
-      val sample = working.limit(localRowCap + 1).collect()
-      if (sample.length <= localRowCap && !sample.exists(_.isNullAt(0)))
-        return localIrlsFit(sample, p, iters, ridge, huberDelta,
-          working.schema(group), outNames, rows0.sparkSession)
+    // size dispatch: see graft.util.DriverDispatch
+    graft.util.DriverDispatch.collect(working, localRowCap, group).foreach { sample =>
+      return localIrlsFit(sample, p, iters, ridge, huberDelta,
+        working.schema(group), outNames, rows0.sparkSession)
     }
     val prepared = parallelFloor(working, p * (p + 3) / 2, working)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -955,18 +942,11 @@ object Glm {
       // would widen every per-iteration scan for nothing
       .select(col(group) +: col("__xd") +: col("__y") +:
         (0 until draws).map(i => col(s"__xq_$i")): _*)
-    // Size dispatch (round 16 — see irlsFitByGroup): a cap-bounded working
-    // set is fit on the driver from ONE bounded collect of the Spark-minted
-    // (group, __xd, __y, __xq_*) frame — the imputation stats pass plus the
-    // collect replace the persist, K moment aggregations and K−1 broadcast
-    // beta joins (7 jobs → ~3 per fit). The xq draws stay IN-PLAN, so the
-    // md5 digest arithmetic has exactly one implementation. Null groups
-    // fall through (the beta equi-join drops them after iteration 1).
-    if (localRowCap > 0) {
-      val sample = withQ.limit(localRowCap + 1).collect()
-      if (sample.length <= localRowCap && !sample.exists(_.isNullAt(0)))
-        return localMiLogitFit(sample, draws, iters, ridge,
-          withQ.schema(group), df.sparkSession)
+    // size dispatch: see graft.util.DriverDispatch. The xq draws stay
+    // in-plan, so the md5 digest arithmetic has exactly one implementation.
+    graft.util.DriverDispatch.collect(withQ, localRowCap, group).foreach { sample =>
+      return localMiLogitFit(sample, draws, iters, ridge,
+        withQ.schema(group), df.sparkSession)
     }
     // persisted for the K IRLS moment aggregations — without it every
     // pass re-scans the raw fact; unpersisted after the pooled result

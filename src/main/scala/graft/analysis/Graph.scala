@@ -49,39 +49,10 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint()
-    // Size dispatch (round 15, the connectedComponents/hardNegatives
-    // discipline): a distinct edge list under `localEdgeCap` is ranked on
-    // the driver — the distributed loop costs ~1 checkpoint job per
-    // iteration plus setup (~9 jobs for the 5-iteration gate query),
-    // pure scheduler latency on a small graph. The local fixpoint is the
-    // DifferentialSpec-pinned micro-long reference ALGEBRA (r6-quantized
-    // contributions, exact micro-unit sums, per-iteration re-round), so
-    // local == looped bit-for-bit; the spec asserts both regimes. The
-    // bounded limit(cap+1).collect() decides AND delivers. Past the cap,
-    // the loop runs unchanged — driver state stays cap-bounded.
-    // the local path needs ONE node type: mixed src/dst widths would box
-    // to different classes (ClassCastException in the Ordering, and Any-
-    // equality would split Int 5 from Long 5) where the distributed loop
-    // coerces both to a common node space — so mixed-type edge lists fall
-    // through to the loop (ADVICE r15)
-    if (localEdgeCap > 0 &&
-        edges.schema("src").dataType == edges.schema("dst").dataType) {
-      val keyOrd: Option[Ordering[Any]] = edges.schema("src").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          Some(Ordering.Long.on((x: Any) => x.asInstanceOf[Long]))
-        case org.apache.spark.sql.types.IntegerType =>
-          Some(Ordering.Int.on((x: Any) => x.asInstanceOf[Int]))
-        case org.apache.spark.sql.types.StringType =>
-          Some(Ordering.String.on((x: Any) => x.asInstanceOf[String]))
-        case _ => None
-      }
-      keyOrd.foreach { ord =>
-        val sample = edges.limit(localEdgeCap + 1).collect()
-        if (sample.length <= localEdgeCap)
-          return pageRankLocal(sample, iters, d, ord,
-            edges.schema("src"), edgesIn.sparkSession)
-      }
-    }
+    // size dispatch: see graft.util.DriverDispatch
+    for (ord <- graft.util.DriverDispatch.nodeOrdering(edges, "src", "dst");
+         sample <- graft.util.DriverDispatch.collect(edges, localEdgeCap, "src", "dst"))
+      return pageRankLocal(sample, iters, d, ord, edges.schema("src"), edgesIn.sparkSession)
     val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("__out"))
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))

@@ -565,13 +565,13 @@ object Curation {
                                   weights: Map[String, Int], defaultWeight: Int): DataFrame = {
     // CpuFloor before the flag kernels — see curationStages (the keeper
     // aggregation references this frame from both sides of its join-back).
-    // The text column keeps its caller-visible name so the caller-bound
-    // `qscore` expression still resolves.
-    val flagged = graft.util.CpuFloor(
-        df.select(id.as("doc_id"), source.as("source"), text.as("text")))
-      .select(col("doc_id"), col("source"),
-        graft.functions.TokenCount.tokenCount(col("text")).as("n_tok"),
-        (graft.text.TextFeatures.filterDecision(col("text")) === "kept").as("q"),
+    // The floor takes the caller's frame unprojected, so the caller-bound
+    // `qscore` resolves against any of its columns; column pruning still
+    // shuffles only the referenced ones.
+    val flagged = graft.util.CpuFloor(df)
+      .select(id.as("doc_id"), source.as("source"),
+        graft.functions.TokenCount.tokenCount(text).as("n_tok"),
+        (graft.text.TextFeatures.filterDecision(text) === "kept").as("q"),
         qscore.as("__qs"))
     val comps = graft.dedup.Dedup.connectedComponents(pairs, "doc_a", "doc_b")
       .withColumnRenamed("node", "doc_id")

@@ -607,23 +607,9 @@ object Dedup {
     * 1..N-1. Label propagation is the Spark-native formulation of
     * union-find: no driver-side state at any corpus size.
     *
-    * Size dispatch (round 15, the Knn.hardNegatives discipline): an edge
-    * list that fits comfortably on the driver (`localEdgeCap`, default 2²⁰
-    * directed edges — realistically a few hundred MB of boxed GenericRows
-    * at the cap, more for string ids; budget driver heap accordingly when
-    * raising it) is solved by driver-side
-    * union-find in ONE job — the distributed loop costs ~3 jobs per round
-    * plus the convergence probe, which is pure scheduler latency on a
-    * small graph and the dominant cost of every components-consuming
-    * query at gate scale. The decision needs no count job: the bounded
-    * `limit(cap + 1).collect()` over the already-checkpointed edges both
-    * decides AND delivers the edge list. Past the cap (the 100x-replica
-    * pair tables), the pointer-jumping loop runs unchanged. Results are
-    * identical by construction — both label every node with the minimum
-    * member id of its component (DifferentialSpec pins local == looped on
-    * random graphs, both dispatch regimes) — and the local output is
-    * sorted by node so run order is deterministic. Driver state is
-    * bounded by the cap: edges, never the corpus.
+    * Below `localEdgeCap` directed edges (default 2²⁰: a few hundred MB of
+    * boxed rows at the cap, more for string ids) the edges are solved by
+    * driver-side union-find instead — see [[graft.util.DriverDispatch]].
     */
   def connectedComponents(pairs: DataFrame, a: String, b: String,
                           maxIters: Int = 20, localEdgeCap: Int = 1 << 20): DataFrame = {
@@ -635,27 +621,10 @@ object Dedup {
         struct(col(b).as("src"), col(a).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .localCheckpoint()
-    if (localEdgeCap > 0) {
-      val keyOrd: Option[Ordering[Any]] = edges.schema("src").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          Some(Ordering.Long.on((x: Any) => x.asInstanceOf[Long]))
-        case org.apache.spark.sql.types.IntegerType =>
-          Some(Ordering.Int.on((x: Any) => x.asInstanceOf[Int]))
-        case org.apache.spark.sql.types.StringType =>
-          Some(Ordering.String.on((x: Any) => x.asInstanceOf[String]))
-        case _ => None
-      }
-      keyOrd.foreach { ord =>
-        val sample = edges.limit(localEdgeCap + 1).collect()
-        // null ids fall through to the distributed loop: union-find would
-        // unbox null to a primitive (conflating it with 0) where label
-        // propagation keeps null as its own group — the loop is the one
-        // source of truth for dirty input (ADVICE r15)
-        if (sample.length <= localEdgeCap &&
-            !sample.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-          return localComponents(sample, ord, edges.schema("src"), pairs.sparkSession)
-      }
-    }
+    // size dispatch: see graft.util.DriverDispatch
+    for (ord <- graft.util.DriverDispatch.nodeOrdering(edges, "src", "dst");
+         sample <- graft.util.DriverDispatch.collect(edges, localEdgeCap, "src", "dst"))
+      return localComponents(sample, ord, edges.schema("src"), pairs.sparkSession)
     // initialize with the first propagation hop already folded in:
     // component0 = min(self, neighbors) comes free from one aggregation
     // over the edge list (which replaces the distinct-nodes scan), so

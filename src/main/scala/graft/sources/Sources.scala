@@ -81,9 +81,11 @@ object Sources {
   def readIncremental(df: DataFrame, tsCol: Column, watermark: java.sql.Timestamp): DataFrame =
     df.filter(tsCol > lit(watermark))
 
-  /** Next watermark for a slice (None when the slice is empty). */
+  /** Next watermark for a slice (None when the slice is empty). The max is
+    * read as a session-zoned TIMESTAMP, so a TIMESTAMP_NTZ column works too
+    * (the slice filters compare it under the same cast). */
   def nextWatermark(df: DataFrame, tsCol: Column): Option[java.sql.Timestamp] =
-    Option(df.agg(max(tsCol)).head().getTimestamp(0))
+    Option(df.agg(max(tsCol).cast("timestamp")).head().getTimestamp(0))
 
   /** Persists a sync watermark as ISO-8601 text at `<cacheDir>/<name>.txt`,
     * mirroring the reference's incremental-sync cache

@@ -168,6 +168,25 @@ class CurationSpec extends SparkSpec {
     assert(surv.agg(sum("n_tok")).head.getLong(0) == out("mixture")._2)
   }
 
+  test("fuzzyCurationExport resolves a caller qscore against any input column") {
+    val good = "the quick brown fox jumps over a lazy dog in warm sunshine"
+    val docs = Seq(
+      (1L, good + " one", "en"),
+      (2L, "short text", "en"),          // near-dup of 1/3 but fails quality
+      (3L, good + " two three", "en"),   // the component's longest kept member
+      (4L, good + " solo", "en")         // singleton
+    ).toDF("doc_id", "body", "lang").withColumn("n_chars", length(col("body")))
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    def kept(text: org.apache.spark.sql.Column, qscore: org.apache.spark.sql.Column) =
+      Curation.fuzzyCurationExport(docs, col("doc_id"), text, col("lang"), pairs,
+          qscore, Map("en" -> 100))
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    // keep-longest: qscore is a column the flow itself never reads
+    assert(kept(col("body"), col("n_chars")) === Seq(3L, 4L))
+    // qscore bound to the text column by the caller's own name
+    assert(kept(col("body"), length(col("body"))) === Seq(3L, 4L))
+  }
+
   test("funnel first-keeper join keys on the text digest, not the document") {
     // boilerplate-heavy corpus: ONE quality-passing text duplicated across
     // many doc ids — the skew shape the digest keying exists for

@@ -329,8 +329,7 @@ class DifferentialSpec extends SparkSpec {
     // the distributed machinery: no joins, no decimal type, no shuffle).
     // Graphs sweep the corner cases the oracle distribution never hits:
     // dangling sinks, self-loops, parallel edges, disconnected stars.
-    // Scale evidence (sf3/sf10 replicas) lives in the probe harness
-    // (tmp/PageRankDiffProbeR12) recorded in SURVEY §5.
+    // Scale evidence (sf3/sf10 replicas) is recorded in SURVEY §5.
     for (seed <- 0 until 5; iters <- Seq(1, 3, 5)) {
       val rnd = new scala.util.Random(seed)
       val nMax = 60

@@ -38,7 +38,9 @@ class GlmLocalFitSpec extends SparkSpec {
   }
 
   test("logit local fit == forced distributed loop, bit for bit") {
-    val df = rowsFor(7, 400).toDF("g", "x1", "x2", "y")
+    // the NaN-x row: SQL FLOOR maps a NaN mean to 0 (a BIGINT round-trip),
+    // and the local fit's rounding must do the same
+    val df = (rowsFor(7, 400) :+ (("g1", Double.NaN, 2.0, 1.0))).toDF("g", "x1", "x2", "y")
     val local = Glm.logitByGroup(df, "g", Seq(col("x1"), col("x2")), col("y"),
       Seq("b0", "b1", "b2"))
     val looped = Glm.logitByGroup(df, "g", Seq(col("x1"), col("x2")), col("y"),

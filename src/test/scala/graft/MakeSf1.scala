@@ -1,11 +1,13 @@
-package graft.tmp
+package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Throwaway dev tool: materialize a 10x replica of sf0.1 at /tmp/sf1 so
-  * the oracle gate can be exercised at ~sf1 (VERDICT r8 item 8). Probe-only
-  * data — the driver's gate stays on the provided testdata.
+/** Dev tool: materialize a `reps`-fold (default 10x) replica of sf0.1 so
+  * the oracle gate can be exercised at ~sf1:
+  * `sbt "Test/runMain graft.MakeSf1 <src dir> <dst dir> <reps>"`. The
+  * benchmark's input generator (perfbench/gen.py) follows the same layout
+  * rules.
   *
   * Replication is key-shifted so every table keeps its join semantics:
   * primary and foreign keys shift by the same replica offset, so each

@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   * blind there, letting floors min-merge across a real regression. Also
   * pins that the mixed-in text is the declared LOGICAL plan: two
   * constructions of the SAME query fingerprint identically (no runtime
-  * AQE artifacts leak in — the cross-config probe in
-  * tmp/planhash_xconfig_r15.log is the full-engine version of that
-  * assertion).
+  * AQE artifacts leak in; ConfigInvarianceSpec checks results, not
+  * fingerprints, across configs).
   */
 class PlanTextSpec extends SparkSpec {
   import spark.implicits._

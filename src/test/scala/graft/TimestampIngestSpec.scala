@@ -52,4 +52,28 @@ class TimestampIngestSpec extends SparkSpec {
       }
     }
   }
+
+  test("syncIncremental keeps the same rows over TIMESTAMP_NTZ as over TIMESTAMP") {
+    import spark.implicits._
+    val rows = (0 until 20).map(i =>
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-03-01 10:${i}%02d:00"))) :+
+      ((99L, null: java.sql.Timestamp))
+    val all = rows.toDF("id", "ts")
+    // two runs per encoding: the first sees half the feed, the second all
+    // of it, resuming from the watermark the first one persisted
+    def runs(enc: DataFrame => DataFrame): Seq[Seq[Long]] = {
+      val cache = java.nio.file.Files.createTempDirectory("graft-wm").toString
+      Seq(all.filter(col("id") < 10 || col("id") === 99), all).map { feed =>
+        var kept = Seq.empty[Long]
+        graft.sources.Sources.syncIncremental(spark, enc(feed), col("ts"), cache, "events") {
+          slice => kept = slice.select("id").as[Long].collect().sorted.toSeq
+        }
+        kept
+      }
+    }
+    val ltz = runs(df => df.withColumn("ts", col("ts").cast(TimestampType)))
+    val ntz = runs(df => df.withColumn("ts", col("ts").cast(TimestampNTZType)))
+    assert(ltz === Seq((0L until 10L) :+ 99L, (10L until 20L) :+ 99L))
+    assert(ntz === ltz)
+  }
 }

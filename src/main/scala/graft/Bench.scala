@@ -37,7 +37,7 @@ object Bench {
           Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(300)) }
       }
       val cold = once()
-      // canonicalized pre-AQE plan: stable across runs (normalized expr
+      // pre-AQE plan fingerprint: stable across runs (normalized expr
       // ids), changes exactly when the declared plan shape changes.
       // Computed AFTER the cold rep: unwrapping a deferred-frame kernel
       // executes its driver-side jobs (IRLS collects, pagerank iterations,
@@ -48,61 +48,17 @@ object Bench {
       // regions.
       val planHash =
         try {
-          // The NON-canonicalized optimized plan: canonicalization sorts
-          // commutative operands by hashCode, and MultiCommutativeOp embeds
-          // a java.lang.Class whose hashCode is per-JVM identity — so any
-          // query with a re-associated a+b+c chain had a per-JVM
-          // fingerprint. The raw optimized plan is deterministic; only
-          // expression ids (#123) and typed-closure identities
-          // (Lambda$NNN/0xADDR@HASH) vary per run, so those are normalized
-          // away before hashing.
-          // Deferred-frame kernels must be UNWRAPPED for the fingerprint:
-          // hashing the leaf alone would make the heaviest queries' hashes
-          // invariant to any kernel change, silently blinding the
+          // PlanText.fingerprint: the normalized NON-canonicalized
+          // optimized plan of the UNWRAPPED deferred frame — hashing the
+          // leaf alone would make the heaviest queries' hashes invariant
+          // to any kernel change, silently blinding the
           // slower-than-floor-with-changed-plan regression tripwire.
           // Building the inner frame pays the kernel's driver-side jobs
           // once per bench run, OUTSIDE the timed region — the cost the
           // registry deferral exists to keep out of plan-only consumers,
           // spent deliberately here because the bench runs the kernels
-          // anyway. (DeferredSummaryNode — the side-effecting export sink
-          // and the constant witness — stays wrapped: its thunk IS the
-          // side effect.)
-          def unwrap(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-            df.queryExecution.analyzed match {
-              case n: graft.plans.DeferredFrameNode => unwrap(n.frame())
-              case _ => df
-            }
-          // InMemoryRelation reprints (shareLazily-backed queries) embed
-          // the cached plan's RUNTIME physical reprint — post-
-          // materialization that includes AQE "Final Plan" sections with
-          // ShuffleQueryStage ids and coalesce counts that vary across
-          // boxes/configs. Strip the reprint (keep the InMemoryRelation
-          // line itself) and mix in each cached subtree's declared LOGICAL
-          // plan instead (PlanText.fingerprintText, ADVICE r14): the
-          // fingerprint stays a pure function of the declared plan AND
-          // still sees a regression INSIDE a shareLazily-cached subtree.
-          val s = graft.util.PlanText.fingerprintText(
-            unwrap(fn(spark, sfDir)).queryExecution.optimizedPlan)
-          val stable = s
-            .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+@[0-9a-fA-F]+", "Lambda")
-            .replaceAll("#\\d+", "#x")
-            // HOF lambda variable names carry a GLOBAL session counter
-            // (lambda x_739#x): the suffix shifts with how many lambda-
-            // bearing plans were built earlier in the session, so adding
-            // or reordering ANY query would churn every later lambda
-            // query's fingerprint on identical code
-            .replaceAll("lambda ([A-Za-z]+)_\\d+#x", "lambda $1#x")
-            // With/CommonExpressionRef ids (_common_expr_16) come from the
-            // SAME kind of session-global counter: any query planned
-            // earlier in the session shifts every later query's
-            // subexpression ids on identical code (third instability
-            // class, found round 8 — regression_ols hashed differently
-            // solo vs mid-suite)
-            .replaceAll("_common_expr_\\d+", "_common_expr_")
-            // dataset_export's scratch dir carries a per-JVM token (so
-            // concurrent processes don't race on one path); the token is
-            // not part of the declared plan shape
-            .replaceAll("graft_dataset_export_[0-9a-f_]+", "graft_dataset_export_")
+          // anyway.
+          val stable = graft.util.PlanText.fingerprint(fn(spark, sfDir))
           f"${scala.util.hashing.MurmurHash3.stringHash(stable)}%08x"
         } catch { case _: Throwable => "err" }
       // warm = MEDIAN of N steady-state reps (default 3 since round 14 —

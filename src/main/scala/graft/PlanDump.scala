@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 /** Optimization-round measurement tool: writes `.explain("formatted")` for
   * each named query (or all) to `<outDir>/<query>_<tag>.txt`, so plan-shape
   * claims (Exchange count, join strategy, PushedFilters/ReadSchema) are
-  * checkable without running Spark. Deferred-frame kernels are unwrapped the
-  * same way Bench's fingerprint does, so the dumped plan is the kernel's
-  * real plan, not the opaque leaf.
+  * checkable without running Spark. Deferred-frame kernels are unwrapped
+  * (`PlanText.unwrapDeferred`), so the dumped plan is the kernel's real
+  * plan, not the opaque leaf.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
   */
@@ -20,17 +20,12 @@ object PlanDump {
       GraftSession.CpuDenseMaxPartitionBytes).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    def unwrap(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      df.queryExecution.analyzed match {
-        case n: graft.plans.DeferredFrameNode => unwrap(n.frame())
-        case _ => df
-      }
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
         try {
-          val txt = unwrap(fn(spark, sfDir)).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val txt = graft.util.PlanText.unwrapDeferred(fn(spark, sfDir))
+            .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
           println(s"[plandump] $name ok (${txt.length} chars)")
         } catch { case e: Throwable =>

@@ -476,7 +476,9 @@ object Curation {
   def curationSurvivorsObserved(df: DataFrame, id: Column, text: Column, source: Column,
                                 weights: Map[String, Int], defaultWeight: Int = 100)
       : (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation("curation_funnel")
+    // a per-call name: Spark rejects two metrics nodes of one name in one
+    // plan, so a fixed name would fail a union of two observed exports
+    val obs = org.apache.spark.sql.Observation(s"curation_funnel_${java.util.UUID.randomUUID()}")
     val staged = curationStages(df, id, text, source, weights, defaultWeight)
       .observe(obs,
         count(lit(1)).as("ingested_docs"),

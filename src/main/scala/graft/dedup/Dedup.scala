@@ -51,6 +51,85 @@ object Dedup {
   // the identical IEEE op sequence
   private val r6 = graft.util.Portable.round6 _
 
+  /** The four metrics of one occupancy cap, in report order: groups, max
+    * occupancy, groups dropped, rows dropped. */
+  private val bucketMetrics = Seq("n_buckets", "max_bucket", "buckets_dropped", "rows_dropped")
+  private val blockMetrics = Seq("n_blocks", "max_occupancy", "blocks_dropped", "rows_dropped")
+
+  /** Ride-along accounting for one occupancy cap: an Observation plus the
+    * cap's metric names. The Observation name carries a per-call suffix:
+    * Spark rejects two metrics nodes of one name in one plan, so a fixed
+    * name would fail every query that unions two observed outputs. */
+  private final class CapObs(prefix: String, val names: Seq[String]) {
+    val obs = org.apache.spark.sql.Observation(s"${prefix}_${java.util.UUID.randomUUID()}")
+    /** The caller's handle; `report` (one row holding the metric columns)
+      * is the fallback scan, run only when the ride never materialized. */
+    def counters(report: => DataFrame): CapCounters =
+      new CapCounters(obs, names.head, () => {
+        val r = report.collect().head
+        names.map(n => n -> r.getAs[Any](n)).toMap
+      })
+  }
+
+  /** The one occupancy-cap step of the blocking joins (simhash band
+    * buckets, linkage blocks, shared shingles): rows whose `keys` group
+    * holds more than `limit` rows are dropped before the self-join. A
+    * group that hot is low-information and quadratic to join; real
+    * matches live in discriminative groups. The count window partitions
+    * on the join keys, so the cap adds no exchange.
+    *
+    * With a [[CapObs]] the cap is not silent: its four metrics ride the
+    * caller's own action as observed metrics instead of costing a second
+    * corpus scan. Observation metrics cannot hold DISTINCT aggregates, so
+    * a `row_number` representative (same partition and order spec as the
+    * count, so both fold into ONE Window node) turns per-group counts into
+    * per-row sums, observed BEFORE the filter drops the hot groups.
+    * Callers pass the CapObs on ONE side of a self-join only (A/X): a
+    * metrics node duplicated across a self-join risks one copy never
+    * executing under exchange reuse, and its empty accumulator could
+    * shadow the real one, so each node runs exactly once per action. When
+    * the query's result is provably empty mid-flight, AQE folds the plan
+    * before the observed stage runs; [[CapCounters.get]] then falls back
+    * to the [[capReport]] scan.
+    */
+  private def capOccupancy(frame: DataFrame, keys: Seq[Column], limit: Long,
+                           cap: Option[CapObs] = None): DataFrame = cap match {
+    case None =>
+      frame.withColumn("__occ", count(lit(1)).over(Window.partitionBy(keys: _*)))
+        .filter(col("__occ") <= limit)
+        .drop("__occ")
+    case Some(c) =>
+      val Seq(groups, maxOcc, groupsDropped, rowsDropped) = c.names
+      val w = Window.partitionBy(keys: _*).orderBy(keys: _*)
+      val rep = col("__rn") === 1
+      val hot = col("__occ") > limit
+      frame
+        .withColumn("__occ", count(lit(1))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+        .withColumn("__rn", row_number().over(w))
+        .observe(c.obs,
+          sum(when(rep, 1L).otherwise(0L)).as(groups),
+          max(col("__occ")).as(maxOcc),
+          sum(when(rep && hot, 1L).otherwise(0L)).as(groupsDropped),
+          sum(when(hot, 1L).otherwise(0L)).as(rowsDropped))
+        .filter(col("__occ") <= limit)
+        .drop("__occ", "__rn")
+  }
+
+  /** Standalone accounting for one occupancy cap: ONE row of the cap's
+    * four metrics (`names`) over `frame`, equal to [[capOccupancy]]'s
+    * observed sums. One map-side-combinable groupBy on `keys`, folded by a
+    * global aggregate. */
+  private def capReport(frame: DataFrame, keys: Seq[Column], limit: Long,
+                        names: Seq[String]): DataFrame = {
+    val Seq(groups, maxOcc, groupsDropped, rowsDropped) = names
+    val hot = col("__occ") > limit
+    frame.groupBy(keys: _*).agg(count(lit(1)).as("__occ"))
+      .agg(count(lit(1)).as(groups),
+        max(col("__occ")).as(maxOcc),
+        sum(when(hot, 1L).otherwise(0L)).as(groupsDropped),
+        sum(when(hot, col("__occ")).otherwise(0L)).as(rowsDropped))
+  }
 
   /** Exact dedup: group by full-content hash; emit group size and the id to
     * keep (minimum). The output IS the dedup decision table. Single hash
@@ -346,20 +425,28 @@ object Dedup {
     simhashPairsImpl(simhash64(cpuFlooredText(df, id, text), col("doc_id"), col("__sh_text")),
       64, numBands, maxHamming, maxBucketSize)
 
-  private def simhashPairsImpl(hashes0: DataFrame, width: Int, numBands: Int, maxHamming: Int,
-                               maxBucketSize: Long): DataFrame = {
+  /** The (band, bk) structs of a `width`-bit simhash string split into
+    * `numBands` equal blocks — explode this to band the hash. */
+  private def simhashBands(width: Int, numBands: Int): Column = {
     require(width % numBands == 0)
-    // ONE evaluation of the hash kernel (round 16, the simhashPairs64Observed
-    // treatment): the banded frame feeds BOTH sides of the bucket self-join,
-    // and the probe showed the build side re-running the scan+simhash
-    // subtree single-task (~1.3 s of the query's ~2 s). The shared frame is
-    // (doc_id, simhash) — N small rows, drained by the caller's
-    // releaseShared like every other shared kernel frame.
-    val hashes = org.apache.spark.sql.graft.Bridge.shareLazily(hashes0)
     val bandLen = width / numBands
-    val bandStructs = (0 until numBands).map { b =>
+    array((0 until numBands).map { b =>
       struct(lit(b).as("band"), substring(col("simhash"), b * bandLen + 1, bandLen).as("bk"))
-    }
+    }: _*)
+  }
+
+  /** The banded bucket self-join behind every simhash pairs kernel; `cap`
+    * observes the bucket cap on the A side (see [[capOccupancy]]). */
+  private def simhashPairsImpl(hashes0: DataFrame, width: Int, numBands: Int, maxHamming: Int,
+                               maxBucketSize: Long, cap: Option[CapObs] = None): DataFrame = {
+    val bands = simhashBands(width, numBands)
+    // ONE evaluation of the hash kernel (round 16): the banded frame feeds
+    // BOTH sides of the bucket self-join, and the probe showed the build
+    // side re-running the scan+simhash subtree single-task (~1.3 s of the
+    // query's ~2 s). The shared frame is (doc_id, simhash) — N small rows,
+    // drained by the caller's releaseShared like every other shared kernel
+    // frame.
+    val hashes = org.apache.spark.sql.graft.Bridge.shareLazily(hashes0)
     // Explicit hash repartition on the bucket keys (round 16): the banded
     // frame's BYTES are tiny but the bucket self-join's CPU is quadratic in
     // bucket occupancy, and AQE's byte-based coalescing collapsed the join
@@ -369,23 +456,21 @@ object Dedup {
     // the window and join require (no extra exchange), and spreads buckets
     // over the session's shuffle partitions at any scale.
     val parts = hashes.sparkSession.sessionState.conf.numShufflePartitions
-    val allBanded = hashes.select(col("doc_id"), col("simhash"),
-      explode(array(bandStructs: _*)).as("bs"))
+    val allBanded = hashes.select(col("doc_id"), col("simhash"), explode(bands).as("bs"))
       .select(col("doc_id"), col("simhash"), col("bs.band").as("band"), col("bs.bk").as("bk"))
       .repartition(parts, col("band"), col("bk"))
     // frequent-bucket suppression: a band value shared by a large fraction of
     // the corpus is low-information and quadratic to join — drop those
     // buckets (a near-dup pair usually still shares a rarer band; standard
     // LSH recall/cost trade). 0 disables the cap.
-    val banded =
+    def capped(c: Option[CapObs]) =
       if (maxBucketSize <= 0) allBanded
-      else allBanded.withColumn("__cnt",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bk"))))
-        .filter(col("__cnt") <= maxBucketSize)
-        .drop("__cnt")
+      else capOccupancy(allBanded, Seq(col("band"), col("bk")), maxBucketSize, c)
+    val b = capped(None)
+    val a = cap.fold(b)(c => capped(Some(c)))
     // verify (cheap fused hamming) BEFORE deduplicating: the filter drops
     // the bulk of the multi-band duplicates, so only survivors shuffle
-    banded.as("a").join(banded.as("b"),
+    a.as("a").join(b.as("b"),
         col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -395,72 +480,25 @@ object Dedup {
       .distinct()
   }
 
-  /** [[simhashPairs64]] with the frequent-bucket cap's accounting attached
-    * as OBSERVED metrics — the linkage treatment (round 15) for the other
-    * results-changing occupancy guard in the engine: when `maxBucketSize`
-    * is enabled it silently drops hot (band, bucket) groups, and a silent
-    * results-changing cap is a contract violation (the
-    * `linkage_block_report` discipline). After the first action on the
-    * returned frame the Observation yields
-    * (n_buckets, max_bucket, buckets_dropped, rows_dropped) over the
-    * banded frame — zero drops on gate data, nonzero means the cap is
-    * CHANGING ANSWERS and the corpus needs a boilerplate look
-    * (SimhashObservedSpec pins both, against an unobserved groupBy of the
-    * same banded frame). Metrics ride the caller's own action: the same
-    * row_number-representative trick as the linkage counters (Observation
-    * metrics cannot hold DISTINCT aggregates), on the A side of the bucket
-    * self-join only so the CollectMetrics node executes exactly once.
-    * Requires the cap enabled — the uncapped kernel drops nothing, so
-    * there is nothing to observe.
+  /** [[simhashPairs64]] with the frequent-bucket cap made visible: when
+    * `maxBucketSize` is enabled it drops hot (band, bucket) groups, which
+    * changes answers, so the cap must never be silent. The same kernel,
+    * with the cap observed on the A side of the bucket self-join
+    * ([[capOccupancy]]); after the first action on the returned frame the
+    * counters yield (n_buckets, max_bucket, buckets_dropped, rows_dropped)
+    * over the banded frame, equal to [[simhashBucketReport]]. Zero drops
+    * on gate data; nonzero means the corpus needs a boilerplate look.
+    * Requires the cap enabled — the uncapped kernel drops nothing.
     */
   def simhashPairs64Observed(df: DataFrame, id: Column, text: Column, numBands: Int,
                              maxHamming: Int, maxBucketSize: Long)
       : (DataFrame, CapCounters) = {
     require(maxBucketSize > 0,
       s"simhashPairs64Observed observes the bucket cap — needs maxBucketSize > 0, got $maxBucketSize")
-    val width = 64
-    require(width % numBands == 0)
-    val bandLen = width / numBands
-    val hashes = org.apache.spark.sql.graft.Bridge.shareLazily(
-      simhash64(cpuFlooredText(df, id, text), col("doc_id"), col("__sh_text")))
-    val bandStructs = (0 until numBands).map { b =>
-      struct(lit(b).as("band"), substring(col("simhash"), b * bandLen + 1, bandLen).as("bk"))
-    }
-    def allBanded = hashes.select(col("doc_id"), col("simhash"),
-      explode(array(bandStructs: _*)).as("bs"))
-      .select(col("doc_id"), col("simhash"), col("bs.band").as("band"), col("bs.bk").as("bk"))
-    val w = Window.partitionBy(col("band"), col("bk")).orderBy(col("doc_id"))
-    val obs = org.apache.spark.sql.Observation("simhash_bucket_cap")
-    val observed = allBanded
-      .withColumn("__cnt", count(lit(1))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("__rn", row_number().over(w))
-      .observe(obs,
-        sum(when(col("__rn") === 1, 1L).otherwise(0L)).as("n_buckets"),
-        max(col("__cnt")).as("max_bucket"),
-        sum(when(col("__rn") === 1 && col("__cnt") > maxBucketSize, 1L).otherwise(0L))
-          .as("buckets_dropped"),
-        sum(when(col("__cnt") > maxBucketSize, 1L).otherwise(0L)).as("rows_dropped"))
-      .filter(col("__cnt") <= maxBucketSize)
-      .drop("__cnt", "__rn")
-    val plain = allBanded
-      .withColumn("__cnt", count(lit(1)).over(Window.partitionBy(col("band"), col("bk"))))
-      .filter(col("__cnt") <= maxBucketSize)
-      .drop("__cnt")
-    val out = observed.as("a").join(plain.as("b"),
-        col("a.band") === col("b.band") && col("a.bk") === col("b.bk") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        graft.functions.ShingleExpressions.hammingDistance(
-          col("a.simhash"), col("b.simhash")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-    def reportRow(): Map[String, Any] = {
-      val r = simhashBucketReport(df, id, text, numBands, maxBucketSize).collect().head
-      Map("n_buckets" -> r.get(0), "max_bucket" -> r.get(1),
-        "buckets_dropped" -> r.get(2), "rows_dropped" -> r.get(3))
-    }
-    (out, new CapCounters(obs, "n_buckets", reportRow _))
+    val cap = new CapObs("simhash_bucket_cap", bucketMetrics)
+    (simhashPairsImpl(simhash64(cpuFlooredText(df, id, text), col("doc_id"), col("__sh_text")),
+        64, numBands, maxHamming, maxBucketSize, Some(cap)),
+      cap.counters(simhashBucketReport(df, id, text, numBands, maxBucketSize)))
   }
 
   /** Standalone accounting for the simhash frequent-bucket cap — the
@@ -468,26 +506,16 @@ object Dedup {
     * (n_buckets, max_bucket, buckets_dropped, rows_dropped) where
     * *_dropped count the (band, bucket) groups / banded rows a
     * `maxBucketSize` guard excludes. Serves as the pre-flight check when
-    * the cap is enabled, and as [[CapCounters]]' fallback when an
-    * everything-dropped query folds empty before the riding metrics run.
-    * One map-side-combinable groupBy over the banded frame. */
+    * the cap is enabled, and as [[CapCounters]]' fallback. */
   def simhashBucketReport(df: DataFrame, id: Column, text: Column, numBands: Int,
                           maxBucketSize: Long): DataFrame = {
-    require(64 % numBands == 0)
+    val bands = simhashBands(64, numBands)
     require(maxBucketSize > 0,
       s"simhashBucketReport accounts for an enabled cap — needs maxBucketSize > 0, got $maxBucketSize")
-    val bandLen = 64 / numBands
-    val bandStructs = (0 until numBands).map { b =>
-      struct(lit(b).as("band"), substring(col("simhash"), b * bandLen + 1, bandLen).as("bk"))
-    }
-    simhash64(cpuFlooredText(df, id, text), col("doc_id"), col("__sh_text"))
-      .select(explode(array(bandStructs: _*)).as("bs"))
+    val banded = simhash64(cpuFlooredText(df, id, text), col("doc_id"), col("__sh_text"))
+      .select(explode(bands).as("bs"))
       .select(col("bs.band").as("band"), col("bs.bk").as("bk"))
-      .groupBy(col("band"), col("bk")).agg(count(lit(1)).as("__occ"))
-      .agg(count(lit(1)).as("n_buckets"),
-        max(col("__occ")).as("max_bucket"),
-        sum(when(col("__occ") > maxBucketSize, 1L).otherwise(0L)).as("buckets_dropped"),
-        sum(when(col("__occ") > maxBucketSize, col("__occ")).otherwise(0L)).as("rows_dropped"))
+    capReport(banded, Seq(col("band"), col("bk")), maxBucketSize, bucketMetrics)
   }
 
   /** Full production dedup flow: MinHash-LSH candidate generation, then
@@ -785,14 +813,9 @@ object Dedup {
     val exploded = df
       .select(id.as("doc_id"), distinctShingles(text, n).as("shingles"))
       .select(col("doc_id"), size(col("shingles")).as("sz"), explode(col("shingles")).as("sh"))
-    // the frequency window partitions on sh — the same key the pair join
-    // hashes on, so the exchange is reused, not added
     val capped =
       if (maxShingleFreq <= 0) exploded
-      else exploded
-        .withColumn("__freq", count(lit(1)).over(Window.partitionBy(col("sh"))))
-        .filter(col("__freq") <= maxShingleFreq)
-        .drop("__freq")
+      else capOccupancy(exploded, Seq(col("sh")), maxShingleFreq)
     val sets = capped.withColumn("__q", leftPred)
     // query docs keep all shared-shingle partners: query-query pairs once
     // (smaller id left), query-nonquery pairs regardless of id order
@@ -835,212 +858,15 @@ object Dedup {
     * [[linkageBlockReport]] over the same (key, blockLen, probeLen,
     * maxBlock) to get per-pass (blocks_dropped, rows_dropped,
     * max_occupancy) accounting — the registered `linkage_block_report`
-    * query is exactly that companion. Remaining sub-cap hot blocks are
+    * query is exactly that companion — or run [[jaroWinklerLinkageObserved]]
+    * to get the same counters on the linkage job itself. Remaining sub-cap hot blocks are
     * AQE skew-split (same caveat as the LSH band joins). Output:
     * (doc_a, doc_b, jw) with doc_a < doc_b.
     */
   def jaroWinklerLinkage(df: DataFrame, id: Column, key: Column,
                          blockLen: Int, probeLen: Int, threshold: Double,
-                         maxBlock: Int = 1000): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"jaroWinklerLinkage needs threshold in (0, 1], got $threshold")
-    val r6 = graft.util.Portable.round6 _
-    linkageCandidates(df, id, key, blockLen, probeLen, maxBlock)
-      .select(col("doc_a"), col("doc_b"),
-        r6(graft.functions.JaroWinkler.jaroWinkler(col("__pa"), col("__pb"))).as("jw"))
-      .filter(col("jw") >= threshold)
-  }
-
-  /** The sorted-token block key: tokens of the probe region, sorted and
-    * re-joined — word-order-insensitive, the recall pass prefix blocking
-    * cannot provide. Dialect twin: array_to_string(list_sort(
-    * string_split(substr(k,1,n), ' ')), ' ') in DuckDB (both engines
-    * split on the literal space keeping empties, sort bytewise). */
-  private def sortedTokenKey(key: Column, probeLen: Int): Column =
-    array_join(array_sort(split(substring(key, 1, probeLen), " ")), " ")
-
-  /** Candidate pairs for the linkage verifiers: the prefix pass unioned
-    * with the sorted-token pass, deduped on the id pair BEFORE the (more
-    * expensive) similarity verification. The base (id, probe) projection
-    * is shareLazily-bound: both passes and their self-joins read one
-    * materialization instead of re-scanning the corpus. */
-  private def linkageCandidates(df: DataFrame, id: Column, key: Column,
-                                blockLen: Int, probeLen: Int, maxBlock: Int,
-                                pairFilter: (Column, Column) => Column = (_, _) => lit(true))
-      : DataFrame = {
-    require(blockLen >= 1 && probeLen >= blockLen,
-      s"linkage needs 1 <= blockLen <= probeLen, got $blockLen/$probeLen")
-    val base = org.apache.spark.sql.graft.Bridge.shareLazily(
-      df.select(id.as("__id"), substring(key, 1, probeLen).as("__probe")))
-    def pass(blockKey: Column) = {
-      val b = linkageBlocks(base, blockKey, maxBlock)
-      b.as("x").join(b.as("y"),
-          col("x.__blk") === col("y.__blk") && col("x.__id") < col("y.__id") &&
-            pairFilter(col("x.__probe"), col("y.__probe")))
-        .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"),
-          col("x.__probe").as("__pa"), col("y.__probe").as("__pb"))
-    }
-    // blockLen <= probeLen, so the prefix key is a prefix of the probe —
-    // both keys derive from the cached projection, never the raw corpus
-    pass(substring(col("__probe"), 1, blockLen))
-      .union(pass(sortedTokenKey(col("__probe"), probeLen)))
-      .distinct()
-  }
-
-  /** One blocking pass over the cached (id, probe) projection: block key +
-    * probe, hot blocks (> maxBlock members) dropped before the self-join.
-    * The occupancy window partitions BY BLOCK (never global) and shuffles
-    * on the same key the join needs, so the guard adds no extra exchange. */
-  private def linkageBlocks(base: DataFrame, blockKey: Column, maxBlock: Int): DataFrame = {
-    require(maxBlock >= 1, s"linkage needs maxBlock >= 1, got $maxBlock")
-    base.select(col("__id"), blockKey.as("__blk"), col("__probe"))
-      .withColumn("__occ", count(lit(1)).over(Window.partitionBy(col("__blk"))))
-      .filter(col("__occ") <= maxBlock)
-      .drop("__occ")
-  }
-
-  /** [[linkageBlocks]] with the cap accounting attached as OBSERVED metrics
-    * (n_blocks, max_occupancy, blocks_dropped, rows_dropped — the
-    * [[linkageBlockReport]] row, minus its block_kind tag): the counts ride
-    * the caller's own action instead of costing a second corpus scan, the
-    * `curationSurvivorsObserved` pattern. At 100 TB that second scan is the
-    * difference between "the cap is observable" and "observability doubles
-    * the job".
-    *
-    * The block representative (row_number == 1, same partition AND order
-    * spec as the occupancy count so both fold into ONE Window node) turns
-    * the per-BLOCK counts into per-ROW sums — `Observation` metrics cannot
-    * hold DISTINCT aggregates. Metrics observe the PRE-filter frame, so
-    * dropped blocks are counted before the guard removes them. */
-  private def linkageBlocksObserved(base: DataFrame, blockKey: Column, maxBlock: Int,
-                                    obs: org.apache.spark.sql.Observation): DataFrame = {
-    require(maxBlock >= 1, s"linkage needs maxBlock >= 1, got $maxBlock")
-    val w = Window.partitionBy(col("__blk")).orderBy(col("__id"))
-    base.select(col("__id"), blockKey.as("__blk"), col("__probe"))
-      .withColumn("__occ", count(lit(1))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("__rn", row_number().over(w))
-      .observe(obs,
-        sum(when(col("__rn") === 1, 1L).otherwise(0L)).as("n_blocks"),
-        max(col("__occ")).as("max_occupancy"),
-        sum(when(col("__rn") === 1 && col("__occ") > maxBlock, 1L).otherwise(0L))
-          .as("blocks_dropped"),
-        sum(when(col("__occ") > maxBlock, 1L).otherwise(0L)).as("rows_dropped"))
-      .filter(col("__occ") <= maxBlock)
-      .drop("__occ", "__rn")
-  }
-
-  /** [[linkageCandidates]] with per-pass drop accounting attached as
-    * observed metrics. The observed block frame sits on the X side of each
-    * pass's self-join ONLY (the Y side rebuilds the plain frame): a
-    * CollectMetrics node duplicated across a self-join risks one copy
-    * never executing under exchange reuse — its empty accumulator could
-    * shadow the real one in the name-keyed metrics map — so each metrics
-    * node here executes exactly once per action. Returns the candidate
-    * frame plus (prefix-pass, sorted-token-pass) counters; each yields
-    * (n_blocks, max_occupancy, blocks_dropped, rows_dropped) after the
-    * first action on the returned frame, equal to the corresponding
-    * [[linkageBlockReport]] row (LinkageObservedSpec pins both, on a
-    * synthetic hot corpus and on gate data). */
-  private def linkageCandidatesObserved(df: DataFrame, id: Column, key: Column,
-                                        blockLen: Int, probeLen: Int, maxBlock: Int,
-                                        pairFilter: (Column, Column) => Column)
-      : (DataFrame, CapCounters, CapCounters) = {
-    require(blockLen >= 1 && probeLen >= blockLen,
-      s"linkage needs 1 <= blockLen <= probeLen, got $blockLen/$probeLen")
-    val prefixObs = org.apache.spark.sql.Observation("linkage_block_prefix")
-    val sortedObs = org.apache.spark.sql.Observation("linkage_block_sorted_tokens")
-    def reportRow(kind: String)(): Map[String, Any] = {
-      val r = linkageBlockReport(df, id, key, blockLen, probeLen, maxBlock)
-        .filter(col("block_kind") === kind).collect().head
-      Map("n_blocks" -> r.get(1), "max_occupancy" -> r.get(2),
-        "blocks_dropped" -> r.get(3), "rows_dropped" -> r.get(4))
-    }
-    val base = org.apache.spark.sql.graft.Bridge.shareLazily(
-      df.select(id.as("__id"), substring(key, 1, probeLen).as("__probe")))
-    def pass(blockKey: Column, obs: org.apache.spark.sql.Observation) = {
-      val x = linkageBlocksObserved(base, blockKey, maxBlock, obs)
-      val y = linkageBlocks(base, blockKey, maxBlock)
-      x.as("x").join(y.as("y"),
-          col("x.__blk") === col("y.__blk") && col("x.__id") < col("y.__id") &&
-            pairFilter(col("x.__probe"), col("y.__probe")))
-        .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"),
-          col("x.__probe").as("__pa"), col("y.__probe").as("__pb"))
-    }
-    val cand = pass(substring(col("__probe"), 1, blockLen), prefixObs)
-      .union(pass(sortedTokenKey(col("__probe"), probeLen), sortedObs))
-      .distinct()
-    (cand,
-      new CapCounters(prefixObs, "n_blocks", reportRow("prefix")),
-      new CapCounters(sortedObs, "n_blocks", reportRow("sorted_tokens")))
-  }
-
-  /** [[jaroWinklerLinkage]] with the hot-block cap accounting attached as
-    * observed metrics — same pairs, and the no-silent-cap guarantee rides
-    * the linkage job itself: after the first action on the returned frame,
-    * each [[CapCounters]] yields the matching [[linkageBlockReport]] row's
-    * (n_blocks, max_occupancy, blocks_dropped, rows_dropped). Production
-    * callers act on the pairs they were computing anyway and read the drop
-    * counters for free; `linkage_block_report` stays the standalone
-    * (oracle-gated) rendering of the same accounting. */
-  def jaroWinklerLinkageObserved(df: DataFrame, id: Column, key: Column,
-                                 blockLen: Int, probeLen: Int, threshold: Double,
-                                 maxBlock: Int = 1000)
-      : (DataFrame, CapCounters, CapCounters) = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"jaroWinklerLinkage needs threshold in (0, 1], got $threshold")
-    val r6 = graft.util.Portable.round6 _
-    val (cand, p, st) = linkageCandidatesObserved(df, id, key, blockLen, probeLen,
-      maxBlock, (_, _) => lit(true))
-    val out = cand.select(col("doc_a"), col("doc_b"),
-        r6(graft.functions.JaroWinkler.jaroWinkler(col("__pa"), col("__pb"))).as("jw"))
-      .filter(col("jw") >= threshold)
-    (out, p, st)
-  }
-
-  /** [[damerauLinkage]] with observed cap accounting — see
-    * [[jaroWinklerLinkageObserved]]. */
-  def damerauLinkageObserved(df: DataFrame, id: Column, key: Column,
-                             blockLen: Int, probeLen: Int, maxDist: Int,
-                             maxBlock: Int = 1000)
-      : (DataFrame, CapCounters, CapCounters) = {
-    require(maxDist >= 0, s"damerauLinkage needs maxDist >= 0, got $maxDist")
-    val (cand, p, st) = linkageCandidatesObserved(df, id, key, blockLen, probeLen,
-      maxBlock, (pa, pb) => abs(length(pa) - length(pb)) <= maxDist)
-    val out = cand.select(col("doc_a"), col("doc_b"),
-        graft.functions.DamerauLevenshtein
-          .damerauLevenshteinBounded(col("__pa"), col("__pb"), maxDist).as("dl"))
-      .filter(col("dl") <= maxDist)
-    (out, p, st)
-  }
-
-  /** Occupancy accounting for the linkage hot-block cap — the cap must
-    * never be silent (a dropped block CHANGES ANSWERS for callers whose
-    * hot prefixes hold true matches). One row per blocking pass:
-    * (block_kind, n_blocks, max_occupancy, blocks_dropped, rows_dropped)
-    * where *_dropped count the blocks/rows the linkage kernels' guard
-    * excludes at this `maxBlock`. Run it beside [[jaroWinklerLinkage]] /
-    * [[damerauLinkage]] with the same parameters — or ship it as the
-    * pre-flight check, the way `key_skew_report` fronts a join. One
-    * map-side-combinable groupBy per pass; the scalars fold the per-block
-    * frame. */
-  def linkageBlockReport(df: DataFrame, id: Column, key: Column,
-                         blockLen: Int, probeLen: Int, maxBlock: Int): DataFrame = {
-    require(blockLen >= 1 && probeLen >= blockLen,
-      s"linkage needs 1 <= blockLen <= probeLen, got $blockLen/$probeLen")
-    require(maxBlock >= 1, s"linkage needs maxBlock >= 1, got $maxBlock")
-    def report(kind: String, blockKey: Column) =
-      df.select(blockKey.as("__blk"))
-        .groupBy(col("__blk")).agg(count(lit(1)).as("__occ"))
-        .agg(count(lit(1)).as("n_blocks"),
-          max(col("__occ")).as("max_occupancy"),
-          sum(when(col("__occ") > maxBlock, 1L).otherwise(0L)).as("blocks_dropped"),
-          sum(when(col("__occ") > maxBlock, col("__occ")).otherwise(0L)).as("rows_dropped"))
-        .select(lit(kind).as("block_kind"), col("n_blocks"), col("max_occupancy"),
-          col("blocks_dropped"), col("rows_dropped"))
-    report("prefix", substring(key, 1, blockLen))
-      .union(report("sorted_tokens", sortedTokenKey(key, probeLen)))
-  }
+                         maxBlock: Int = 1000): DataFrame =
+    linkage(df, id, key, blockLen, probeLen, maxBlock, jaroWinklerVerifier(threshold), None)
 
   /** Blocked Damerau-Levenshtein linkage: the transposition-aware edit
     * verifier for typo-heavy sources ("teh"/"the" is ONE edit here, two
@@ -1065,13 +891,126 @@ object Dedup {
     */
   def damerauLinkage(df: DataFrame, id: Column, key: Column,
                      blockLen: Int, probeLen: Int, maxDist: Int,
-                     maxBlock: Int = 1000): DataFrame = {
+                     maxBlock: Int = 1000): DataFrame =
+    linkage(df, id, key, blockLen, probeLen, maxBlock, damerauVerifier(maxDist), None)
+
+  /** [[jaroWinklerLinkage]] with the hot-block cap made visible: the same
+    * kernel, with each pass's cap observed on the X side of its self-join
+    * ([[capOccupancy]]). After the first action on the returned frame the
+    * (prefix-pass, sorted-token-pass) [[CapCounters]] each yield the
+    * matching [[linkageBlockReport]] row's (n_blocks, max_occupancy,
+    * blocks_dropped, rows_dropped). Production callers act on the pairs
+    * they were computing anyway and read the drop counters for free;
+    * `linkage_block_report` stays the standalone (oracle-gated) rendering
+    * of the same accounting. */
+  def jaroWinklerLinkageObserved(df: DataFrame, id: Column, key: Column,
+                                 blockLen: Int, probeLen: Int, threshold: Double,
+                                 maxBlock: Int = 1000)
+      : (DataFrame, CapCounters, CapCounters) =
+    linkageObserved(df, id, key, blockLen, probeLen, maxBlock, jaroWinklerVerifier(threshold))
+
+  /** [[damerauLinkage]] with observed cap accounting — see
+    * [[jaroWinklerLinkageObserved]]. */
+  def damerauLinkageObserved(df: DataFrame, id: Column, key: Column,
+                             blockLen: Int, probeLen: Int, maxDist: Int,
+                             maxBlock: Int = 1000)
+      : (DataFrame, CapCounters, CapCounters) =
+    linkageObserved(df, id, key, blockLen, probeLen, maxBlock, damerauVerifier(maxDist))
+
+  /** What distinguishes the linkage kernels: a pair gate applied inside
+    * the blocking join, and the scoring of the deduped
+    * (doc_a, doc_b, __pa, __pb) candidates. */
+  private final case class LinkageVerifier(pairFilter: (Column, Column) => Column,
+                                           score: DataFrame => DataFrame)
+
+  private def jaroWinklerVerifier(threshold: Double): LinkageVerifier = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"jaroWinklerLinkage needs threshold in (0, 1], got $threshold")
+    LinkageVerifier((_, _) => lit(true),
+      _.select(col("doc_a"), col("doc_b"),
+          r6(graft.functions.JaroWinkler.jaroWinkler(col("__pa"), col("__pb"))).as("jw"))
+        .filter(col("jw") >= threshold))
+  }
+
+  private def damerauVerifier(maxDist: Int): LinkageVerifier = {
     require(maxDist >= 0, s"damerauLinkage needs maxDist >= 0, got $maxDist")
-    linkageCandidates(df, id, key, blockLen, probeLen, maxBlock,
-        (pa, pb) => abs(length(pa) - length(pb)) <= maxDist)
-      .select(col("doc_a"), col("doc_b"),
-        graft.functions.DamerauLevenshtein
-          .damerauLevenshteinBounded(col("__pa"), col("__pb"), maxDist).as("dl"))
-      .filter(col("dl") <= maxDist)
+    LinkageVerifier((pa, pb) => abs(length(pa) - length(pb)) <= maxDist,
+      _.select(col("doc_a"), col("doc_b"),
+          graft.functions.DamerauLevenshtein
+            .damerauLevenshteinBounded(col("__pa"), col("__pb"), maxDist).as("dl"))
+        .filter(col("dl") <= maxDist))
+  }
+
+  /** The sorted-token block key: tokens of the probe region, sorted and
+    * re-joined — word-order-insensitive, the recall pass prefix blocking
+    * cannot provide. Dialect twin: array_to_string(list_sort(
+    * string_split(substr(k,1,n), ' ')), ' ') in DuckDB (both engines
+    * split on the literal space keeping empties, sort bytewise). */
+  private def sortedTokenKey(key: Column, probeLen: Int): Column =
+    array_join(array_sort(split(substring(key, 1, probeLen), " ")), " ")
+
+  /** The linkage kernel: the prefix pass unioned with the sorted-token
+    * pass, deduped on the id pair BEFORE the (more expensive) scoring. The
+    * base (id, probe) projection is shareLazily-bound: both passes and
+    * their self-joins read one materialization instead of re-scanning the
+    * corpus. Each pass caps its blocks at `maxBlock` members on both join
+    * sides; `caps` (prefix, sorted-token) observes them on the X side. */
+  private def linkage(df: DataFrame, id: Column, key: Column,
+                      blockLen: Int, probeLen: Int, maxBlock: Int,
+                      v: LinkageVerifier, caps: Option[(CapObs, CapObs)]): DataFrame = {
+    require(blockLen >= 1 && probeLen >= blockLen,
+      s"linkage needs 1 <= blockLen <= probeLen, got $blockLen/$probeLen")
+    require(maxBlock >= 1, s"linkage needs maxBlock >= 1, got $maxBlock")
+    val base = org.apache.spark.sql.graft.Bridge.shareLazily(
+      df.select(id.as("__id"), substring(key, 1, probeLen).as("__probe")))
+    def pass(blockKey: Column, cap: Option[CapObs]) = {
+      val keyed = base.select(col("__id"), blockKey.as("__blk"), col("__probe"))
+      val y = capOccupancy(keyed, Seq(col("__blk")), maxBlock)
+      val x = cap.fold(y)(c => capOccupancy(keyed, Seq(col("__blk")), maxBlock, Some(c)))
+      x.as("x").join(y.as("y"),
+          col("x.__blk") === col("y.__blk") && col("x.__id") < col("y.__id") &&
+            v.pairFilter(col("x.__probe"), col("y.__probe")))
+        .select(col("x.__id").as("doc_a"), col("y.__id").as("doc_b"),
+          col("x.__probe").as("__pa"), col("y.__probe").as("__pb"))
+    }
+    // blockLen <= probeLen, so the prefix key is a prefix of the probe —
+    // both keys derive from the cached projection, never the raw corpus
+    v.score(pass(substring(col("__probe"), 1, blockLen), caps.map(_._1))
+      .union(pass(sortedTokenKey(col("__probe"), probeLen), caps.map(_._2)))
+      .distinct())
+  }
+
+  /** The observed linkage entry: the plain kernel with both passes' caps
+    * observed, plus the two counters with their report-row fallbacks. */
+  private def linkageObserved(df: DataFrame, id: Column, key: Column,
+                              blockLen: Int, probeLen: Int, maxBlock: Int,
+                              v: LinkageVerifier): (DataFrame, CapCounters, CapCounters) = {
+    val prefix = new CapObs("linkage_block_prefix", blockMetrics)
+    val sorted = new CapObs("linkage_block_sorted_tokens", blockMetrics)
+    def report(kind: String) = linkageBlockReport(df, id, key, blockLen, probeLen, maxBlock)
+      .filter(col("block_kind") === kind)
+    (linkage(df, id, key, blockLen, probeLen, maxBlock, v, Some((prefix, sorted))),
+      prefix.counters(report("prefix")), sorted.counters(report("sorted_tokens")))
+  }
+
+  /** Occupancy accounting for the linkage hot-block cap — the cap must
+    * never be silent (a dropped block CHANGES ANSWERS for callers whose
+    * hot prefixes hold true matches). One row per blocking pass:
+    * (block_kind, n_blocks, max_occupancy, blocks_dropped, rows_dropped)
+    * where *_dropped count the blocks/rows the linkage kernels' guard
+    * excludes at this `maxBlock`. Run it beside [[jaroWinklerLinkage]] /
+    * [[damerauLinkage]] with the same parameters — or ship it as the
+    * pre-flight check, the way `key_skew_report` fronts a join. One
+    * [[capReport]] per pass. */
+  def linkageBlockReport(df: DataFrame, id: Column, key: Column,
+                         blockLen: Int, probeLen: Int, maxBlock: Int): DataFrame = {
+    require(blockLen >= 1 && probeLen >= blockLen,
+      s"linkage needs 1 <= blockLen <= probeLen, got $blockLen/$probeLen")
+    require(maxBlock >= 1, s"linkage needs maxBlock >= 1, got $maxBlock")
+    def report(kind: String, blockKey: Column) =
+      capReport(df.select(blockKey.as("__blk")), Seq(col("__blk")), maxBlock, blockMetrics)
+        .select(lit(kind).as("block_kind") +: blockMetrics.map(col): _*)
+    report("prefix", substring(key, 1, blockLen))
+      .union(report("sorted_tokens", sortedTokenKey(key, probeLen)))
   }
 }

@@ -1,9 +1,55 @@
 package graft.util
 
-/** Text surgery on Spark plan strings, shared by the bench fingerprint and
-  * the plan-audit specs.
+import org.apache.spark.sql.DataFrame
+
+/** Text surgery on Spark plan strings, shared by the bench fingerprint, the
+  * plan dumps and the plan-audit specs.
   */
 object PlanText {
+
+  /** The real frame behind deferred-frame leaves: a registry entry whose
+    * kernel interleaves Spark actions with plan construction is bound
+    * behind [[graft.plans.DeferredFrameNode]] (construction stays
+    * job-free). Unwrapping builds the inner frame and pays its jobs; plan
+    * consumers need it, since the leaf alone hides the kernel's plan.
+    * (DeferredSummaryNode — a side-effecting sink — stays wrapped: its
+    * thunk IS the side effect.) */
+  def unwrapDeferred(df: DataFrame): DataFrame =
+    df.queryExecution.analyzed match {
+      case n: graft.plans.DeferredFrameNode => unwrapDeferred(n.frame())
+      case _ => df
+    }
+
+  /** The plan fingerprint of `df`: [[fingerprintText]] of the unwrapped
+    * frame's optimized plan, [[normalize]]d. A pure function of the
+    * declared plan shape — it changes exactly when that shape does. */
+  def fingerprint(df: DataFrame): String =
+    normalize(fingerprintText(unwrapDeferred(df).queryExecution.optimizedPlan))
+
+  /** Maps the parts of a plan string that vary between runs or sessions on
+    * identical code to fixed tokens. The NON-canonicalized optimized plan
+    * is used because canonicalization sorts commutative operands by
+    * hashCode, and MultiCommutativeOp embeds a java.lang.Class whose
+    * hashCode is per-JVM identity. What remains unstable is normalized:
+    *  - expression ids (#123) and typed-closure identities
+    *    (Lambda$NNN/0xADDR@HASH);
+    *  - HOF lambda variable names (lambda x_739) and With/CommonExpressionRef
+    *    ids (_common_expr_16): both come from session-global counters, so
+    *    any plan built earlier in the session shifts them;
+    *  - dataset_export's per-JVM scratch-dir token;
+    *  - partition counts of Repartition / RepartitionByExpression, which
+    *    follow the session's core count and `spark.sql.shuffle.partitions`,
+    *    not the declared plan.
+    */
+  private def normalize(plan: String): String =
+    plan
+      .replaceAll("Lambda\\$\\d+/0x[0-9a-fA-F]+@[0-9a-fA-F]+", "Lambda")
+      .replaceAll("#\\d+", "#x")
+      .replaceAll("lambda ([A-Za-z]+)_\\d+#x", "lambda $1#x")
+      .replaceAll("_common_expr_\\d+", "_common_expr_")
+      .replaceAll("graft_dataset_export_[0-9a-f_]+", "graft_dataset_export_")
+      .replaceAll("Repartition \\d+, ", "Repartition N, ")
+      .replaceAll("(RepartitionByExpression \\[.*\\]), \\d+", "$1, N")
 
   /** The fingerprint TEXT for an optimized plan: the plan string with every
     * InMemoryRelation's runtime reprint stripped ([[stripCachedReprints]]),

@@ -12,19 +12,11 @@ class PlanAuditSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  /** Unwraps deferred-frame leaves so the audits see the REAL plan: a
-    * registry entry whose kernel interleaves driver actions with plan
-    * construction is bound behind [[graft.plans.DeferredFrameNode]]
-    * (construction stays job-free); here, in the audit, building the inner
-    * frame (and paying its jobs) is exactly the point. */
-  private def innerFrame(df: DataFrame): DataFrame =
-    df.queryExecution.analyzed match {
-      case n: graft.plans.DeferredFrameNode => innerFrame(n.frame())
-      case _ => df
-    }
-
+  /** The registry frame with deferred-frame leaves unwrapped, so the
+    * audits see the REAL plan; here, building the inner frame (and paying
+    * its jobs) is exactly the point. */
   private def auditFrame(name: String): DataFrame =
-    innerFrame(SparkEntry.queries(name)(spark, sfDir))
+    graft.util.PlanText.unwrapDeferred(SparkEntry.queries(name)(spark, sfDir))
 
   private def plan(name: String): String =
     auditFrame(name).queryExecution.executedPlan.toString

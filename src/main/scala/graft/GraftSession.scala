@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Session factory with the engine's standard tuning.
   *
@@ -21,6 +23,18 @@ object GraftSession {
     * default — 8× the tasks for no CPU to hide is pure overhead. */
   val CpuDenseMaxPartitionBytes: Long = 16L * 1024 * 1024
 
+  /** A session builder with the engine's extensions and settings (each
+    * commented where it is set).
+    *
+    * Session settings: `spark.sql.codegen.cache.maxEntries` is raised from
+    * Spark's 100 to 2000 compiled classes. One pass of a composed workload
+    * generates 280-340 distinct classes, so at 100 the LRU cache evicts and
+    * recompiles nearly all of them on every repeat of the same queries. The
+    * setting is static and JVM-wide: `CodeGenerator` reads it once, when it
+    * first compiles code, from the session that does so, and every later
+    * session in the JVM shares that cache. A caller who builds its own
+    * `SparkSession` must set it on its own builder, before any query runs.
+    */
   def builder(master: String = "local[*]", shufflePartitions: Int = 32,
               maxPartitionBytes: Long = 128L * 1024 * 1024): SparkSession.Builder =
     SparkSession.builder()
@@ -46,6 +60,9 @@ object GraftSession {
       // scan split grain: Spark's IO default unless the caller opts into
       // the CPU grain (see CpuDenseMaxPartitionBytes)
       .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes.toString)
+      // static, JVM-wide: sized to hold a composed workload's generated
+      // classes (see the scaladoc above)
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
 
   def get(master: String = "local[*]"): SparkSession = {
@@ -69,7 +86,56 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
 
-  /** Loads one of the standard test tables from an sf directory.
+  /** (mtime, total byte length, file count) of a table path: driver-side
+    * metadata only, never a Spark job. Directory mtime alone is
+    * millisecond-granular on local filesystems and coarser on some object
+    * stores, so a delete+rewrite landing in the same tick would keep it;
+    * byte length and file count change with any real rewrite. */
+  private def signature(spark: SparkSession, path: String): (Long, Long, Int) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory) {
+      val kids = fs.listStatus(p)
+      (st.getModificationTime, kids.map(_.getLen).sum, kids.length)
+    } else (st.getModificationTime, st.getLen, 1)
+  }
+
+  /** One catalog entry: the inferred schema and the analyzed relation of a
+    * table path, as of its content signature, resolved in `owner`. */
+  private final case class Cataloged(sig: (Long, Long, Int), schema: StructType,
+                                     owner: SparkSession, relation: MultiInstanceRelation)
+
+  /** Per-JVM table catalog, keyed by PATH, the way a metastore serves
+    * declared tables (Spark's own session catalog keeps resolved relations
+    * of its data-source tables the same way).
+    *
+    * The schema: parquet schema inference launches a footer-read Spark JOB
+    * per `spark.read.parquet` call, so without a catalog every registry
+    * DataFrame CONSTRUCTION pays one job per table it touches (measured: a
+    * 1-6 job baseline across all 246 queries). First access per path infers
+    * once; every later construction is job-free. Inference-affecting
+    * session configs are uniform across GraftSession builders (nanosAsLong
+    * is set in `builder`), so the schema is shared across sessions.
+    *
+    * The relation: resolving a parquet read on the driver looks the source
+    * up through a ServiceLoader, lists the files and copies the Hadoop
+    * conf, on every call. The analyzed relation is kept and each call gets
+    * a fresh instance of it (new expression ids, so two reads of one path
+    * self-join cleanly). A relation is bound to the session that resolved
+    * it, so it is served only to that session (compared by reference);
+    * another session resolves, and takes over the entry.
+    *
+    * The content signature ([[signature]]) is stored in the value: a path
+    * REWRITTEN in the same JVM (probe replicas, test scratch dirs) replaces
+    * its entry instead of leaking a superseded one per rewrite, and
+    * re-infers and re-lists instead of serving a stale schema (which for a
+    * ts physical-type flip would mis-scale every timestamp 1000x) or a
+    * stale file list. */
+  private val catalog = new java.util.concurrent.ConcurrentHashMap[String, Cataloged]()
+
+  /** Loads one of the standard test tables from an sf directory, through
+    * the per-JVM [[catalog]].
     *
     * The `ts` column is normalized to session-zoned TIMESTAMP regardless of
     * how the writing engine encoded it — a 100 TB feed spans parquet writers
@@ -83,46 +149,22 @@ object GraftSession {
     *     identity on the wall clock, so downstream results are unchanged.
     *   - TIMESTAMP(MICROS, isAdjustedToUTC=true) → already TIMESTAMP: as-is.
     */
-  /** Per-JVM schema catalog: parquet schema inference launches a footer-read
-    * Spark JOB per `spark.read.parquet` call, so without a cache every
-    * registry DataFrame CONSTRUCTION pays one job per table it touches
-    * (measured: a 1-6 job baseline across all 246 queries). A production
-    * deployment declares table schemas in a catalog; this map is that
-    * catalog — first access per (dir, table) infers once, every later
-    * construction is job-free. The cache is keyed by PATH with a content
-    * signature stored in the value (all driver-side metadata stats, no
-    * job): a path REWRITTEN in the same JVM — probe replicas, test scratch
-    * dirs — replaces its entry instead of leaking a superseded one per
-    * rewrite, and re-infers instead of silently applying a stale schema
-    * (which for a ts physical-type flip would mis-scale every timestamp
-    * 1000x). The signature is (mtime, total byte length, file count), not
-    * mtime alone: directory mtime is millisecond-granular on local
-    * filesystems and coarser on some object stores, so a delete+rewrite
-    * landing in the same tick would otherwise serve the stale schema —
-    * byte length and file count change with any real rewrite.
-    * Inference-affecting session configs are uniform across GraftSession
-    * builders (nanosAsLong is set in `builder`), so config skew cannot
-    * poison the cache. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, ((Long, Long, Int), org.apache.spark.sql.types.StructType)]()
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val sig: (Long, Long, Int) =
-      try {
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val st = fs.getFileStatus(p)
-        if (st.isDirectory) {
-          val kids = fs.listStatus(p)
-          (st.getModificationTime, kids.map(_.getLen).sum, kids.length)
-        } else (st.getModificationTime, st.getLen, 1)
-      } catch { case scala.util.control.NonFatal(_) => (0L, 0L, 0) }
-    val schema = schemaCache.compute(path, (p, prev) =>
-      if (prev != null && prev._1 == sig) prev
-      else (sig, spark.read.parquet(p).schema))._2
-    val df = spark.read.schema(schema).parquet(path)
+    val sig =
+      try signature(spark, path)
+      catch { case scala.util.control.NonFatal(_) => (0L, 0L, 0) }
+    val entry = catalog.compute(path, (p, prev) =>
+      if (prev != null && prev.sig == sig && (prev.owner eq spark)) prev
+      else {
+        val schema =
+          if (prev != null && prev.sig == sig) prev.schema
+          else spark.read.parquet(p).schema
+        // a parquet read analyzes to one file relation (v1 or v2), nothing above it
+        val rel = Bridge.analyzed(spark.read.schema(schema).parquet(p))
+        Cataloged(sig, schema, spark, rel.asInstanceOf[MultiInstanceRelation])
+      })
+    val df = Bridge.ofRows(spark, entry.relation.newInstance())
     val tsNorm =
       if (!df.schema.fieldNames.contains("ts")) df
       else df.schema("ts").dataType match {
@@ -152,26 +194,20 @@ object GraftSession {
     * every footer carries the file's exact row count, read DRIVER-SIDE via
     * the Hadoop input-file API — never a Spark job, so operators that
     * dispatch on it keep the job-free-construction contract
-    * (PlanAuditSpec). Cached under the same (mtime, bytes, file-count)
-    * content signature as [[table]]'s schema catalog: a rewritten path
-    * re-reads instead of serving a stale count across the exact/LSH
-    * dispatch boundary. */
+    * (PlanAuditSpec). Cached under the same content [[signature]] as
+    * [[table]]'s catalog: a rewritten path re-reads instead of serving a
+    * stale count across the exact/LSH dispatch boundary. */
   def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
     val path = s"$sfDir/$name.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val sig: (Long, Long, Int) =
-      if (st.isDirectory) {
-        val kids = fs.listStatus(p)
-        (st.getModificationTime, kids.map(_.getLen).sum, kids.length)
-      } else (st.getModificationTime, st.getLen, 1)
+    val sig = signature(spark, path)
     rowCountCache.compute(path, (_, prev) =>
       if (prev != null && prev._1 == sig) prev
       else {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val fs = p.getFileSystem(conf)
         val files =
-          if (st.isDirectory)
+          if (fs.getFileStatus(p).isDirectory)
             fs.listStatus(p).toSeq.map(_.getPath)
               .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
           else Seq(p)

@@ -244,7 +244,10 @@ object Stats {
     require(windowDays >= 1, s"stickinessDaily needs windowDays >= 1, got $windowDays")
     val ev = df.select(entity.as("__e"), ts.cast("date").as("__day"))
       .filter(col("__day").isNotNull)
-    val range = broadcast(ev.agg(min(col("__day")).as("__lo"), max(col("__day")).as("__hi")))
+    // no join hint: the one-row range becomes the spine, the preserved side
+    // of both left joins, which Spark cannot build; AQE broadcasts the
+    // day-keyed dau/wau sides on its own
+    val range = ev.agg(min(col("__day")).as("__lo"), max(col("__day")).as("__hi"))
     val spine = range.select(explode(expr("sequence(__lo, __hi, interval 1 day)")).as("day"))
     val dau = ev.groupBy(col("__day").as("day"))
       .agg(countDistinct(col("__e")).as("dau"))

@@ -395,8 +395,10 @@ class StatsSpec extends SparkSpec {
   }
 
   test("targetEncodeLoo: excludes self, singleton falls back to global mean") {
-    val df = Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "a", 3.0),
-      (4L, "b", 10.0)).toDF("id", "cat", "y").repartition(3)
+    // three partitions, made narrowly: targetEncodeLoo floors its input's
+    // parallelism (CpuFloor), which takes narrow frames only
+    val df = spark.sparkContext.parallelize(Seq((1L, "a", 1.0), (2L, "a", 2.0),
+      (3L, "a", 3.0), (4L, "b", 10.0)), 3).toDF("id", "cat", "y")
     val out = graft.analysis.Stats.targetEncodeLoo(df, col("id"), col("cat"),
       col("y")).collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     assert(out(1L) === 2.5)  // (2+3)/2, own value excluded
@@ -575,8 +577,14 @@ class StatsSpec extends SparkSpec {
     def d(day: Int) = java.sql.Timestamp.valueOf(f"2024-01-$day%02d 10:00:00")
     // users 1,2 on day 1; nobody day 2; user 1 on day 3
     val df = Seq((1L, d(1)), (2L, d(1)), (1L, d(3))).toDF("u", "ts")
-    val out = graft.analysis.Stats.stickinessDaily(df, col("u"), col("ts"), 7)
-      .orderBy("day").collect()
+    val sticky = graft.analysis.Stats.stickinessDaily(df, col("u"), col("ts"), 7)
+    // the day spine is the preserved side of both left joins: Spark cannot
+    // build it, so a hint there is dropped (and logged) on every call
+    val joins = sticky.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(joins.size === 2 && joins.forall(_.hint.leftHint.isEmpty), joins.map(_.hint))
+    val out = sticky.orderBy("day").collect()
     assert(out.length === 3)
     assert(out(0).getLong(1) === 2 && out(0).getLong(2) === 2) // day 1: dau 2, wau 2
     assert(out(1).getLong(1) === 0 && out(1).getLong(2) === 2) // gap day: 0/2
